@@ -2,78 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSim, Hash60, IntersectCard, LshBucket, MinHashSig, RewriteSetCardinality, RpProject, SimHash64, SimHash64Weighted, UnionCard}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import graft.functions.{GraftFunctions, RewriteSetCardinality}
 
 /** SparkSessionExtensions entry point: makes graft's native kernels
   * first-class SQL functions in any session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`) — no per-session
   * registry call needed, and the functions are visible to plain
-  * `spark.sql(...)` users.
+  * `spark.sql(...)` users. The functions are the rows of
+  * [[GraftFunctions.functions]], the same table `register` installs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RewriteSetCardinality)
-    ext.injectFunction(
-      (
-        FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-        args => CosineSim(args.head, args(1))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("simhash64"),
-        new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-        args => SimHash64(args.head)))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-        args => MinHashSig(args.head, 32)))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("hash60"),
-        new ExpressionInfo(classOf[Hash60].getName, "hash60"),
-        args => Hash60(args.head)))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("simhash64w"),
-        new ExpressionInfo(classOf[SimHash64Weighted].getName, "simhash64w"),
-        args => SimHash64Weighted(args.head, args(1))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("intersect_card"),
-        new ExpressionInfo(classOf[IntersectCard].getName, "intersect_card"),
-        args => IntersectCard(args.head, args(1))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("union_card"),
-        new ExpressionInfo(classOf[UnionCard].getName, "union_card"),
-        args => UnionCard(args.head, args(1))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("rp_project"),
-        new ExpressionInfo(classOf[RpProject].getName, "rp_project"),
-        args =>
-          RpProject(args.head, args(1) match {
-            case Literal(v: Int, _) => v
-            case other =>
-              throw new IllegalArgumentException(s"rp_project: k must be a literal, got $other")
-          })))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("lsh_bucket"),
-        new ExpressionInfo(classOf[LshBucket].getName, "lsh_bucket"),
-        args => {
-          val lits = args.drop(1).map {
-            case Literal(v: Int, _) => v
-            case other =>
-              throw new IllegalArgumentException(
-                s"lsh_bucket: table/bits must be literals, got $other")
-          }
-          LshBucket(args.head, lits(0), lits(1))
-        }))
+    GraftFunctions.functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
   }
 }

@@ -87,20 +87,4 @@ object Tables {
       if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
     }
   }
-
-  /** Hash-repartition on `cols` with an EXPLICIT partition count (the
-    * session default parallelism), pinning the task count of the
-    * stage that follows (r13 optimization round, guide §2.5): AQE's
-    * post-shuffle coalescing sizes partitions by the exchange's
-    * OUTPUT bytes, which under-parallelizes stages whose cost is
-    * dominated by downstream fan-out — measured on the co-purchase
-    * basket→pair explosion, which AQE squeezed onto 4 tasks (5 s of
-    * CPU) because the pre-explosion shuffle was only ~5 MB. An
-    * explicit-N repartition is never coalesced. Results are
-    * partition-invariant; the exchange replaces the aggregation
-    * exchange that followed anyway (same key), so no extra shuffle
-    * at scale.
-    */
-  def fanOutBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, cols: _*)
 }

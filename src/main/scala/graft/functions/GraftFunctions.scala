@@ -1,30 +1,102 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** Registers graft's native Catalyst expressions as SQL functions so
-  * operators can use them via `expr("cosine_sim(a, b)")` — the stable
-  * way to lift a catalyst Expression into the Column API across Spark
-  * versions (Column-from-Expression constructors are internal in 4.x).
+/** graft's native Catalyst expressions as SQL functions, so operators
+  * can use them via `expr("cosine_sim(a, b)")` — the stable way to lift
+  * a catalyst Expression into the Column API across Spark versions
+  * (Column-from-Expression constructors are internal in 4.x).
+  *
+  * [[functions]] is the one definition of each kernel's SQL surface:
+  * [[register]] installs it per session and [[graft.GraftExtensions]]
+  * session-wide, so both paths expose the same names with the same
+  * argument checks.
   */
 object GraftFunctions {
 
-  /** Arity guard: a silently ignored argument (e.g. `minhash_sig(x, 64)`
-    * returning a 32-hash signature) is a wrong-results bug, not a nicety.
+  /** One call's arguments, with the literal rule every integer
+    * parameter shares.
     */
-  private def checkArity(
-      name: String,
-      args: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      expected: Int*): Unit =
-    if (!expected.contains(args.length)) {
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name,
-          "expectedNum" -> expected.mkString(" or "),
-          "actualNum" -> args.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
+  final class Args private[GraftFunctions] (fn: String, exprs: Seq[Expression]) {
+    def apply(i: Int): Expression = exprs(i)
+    def size: Int = exprs.size
+
+    /** Argument `i` as an integer literal in [lo, hi]. Out of range is
+      * an analysis-time error, never a silent wrap, truncation or
+      * in-task crash.
+      */
+    def long(i: Int, what: String, lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Long = {
+      val v = exprs(i) match {
+        case Literal(v: Int, IntegerType) => v.toLong
+        case Literal(v: Long, LongType)   => v
+        case other =>
+          throw new IllegalArgumentException(s"$fn: $what must be an integer literal, got $other")
+      }
+      if (v < lo || v > hi)
+        throw new IllegalArgumentException(s"$fn: $what must be in [$lo, $hi], got $v")
+      v
     }
+
+    def int(i: Int, what: String, lo: Int = Int.MinValue, hi: Int = Int.MaxValue): Int =
+      long(i, what, lo, hi).toInt
+  }
+
+  /** One SQL function: its name, the expression class its
+    * `ExpressionInfo` names, and the validated builder both paths call.
+    * A silently ignored argument (e.g. `minhash_sig(x, 64)` returning a
+    * 32-hash signature) is a wrong-results bug, so the builder rejects
+    * every arity not listed.
+    */
+  final class SqlFunction(val name: String, cls: Class[_ <: Expression], arities: Int*)(
+      make: Args => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+
+    val builder: Seq[Expression] => Expression = args => {
+      if (!arities.contains(args.length))
+        throw new AnalysisException(
+          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+          messageParameters = Map(
+            "functionName" -> name,
+            "expectedNum" -> arities.mkString(" or "),
+            "actualNum" -> args.length.toString,
+            "docroot" -> "https://spark.apache.org/docs/latest"))
+      make(new Args(name, args))
+    }
+  }
+
+  val functions: Seq[SqlFunction] = Seq(
+    new SqlFunction("cosine_sim", classOf[CosineSim], 2)(a => CosineSim(a(0), a(1))),
+    new SqlFunction("simhash64", classOf[SimHash64], 1)(a => SimHash64(a(0))),
+    new SqlFunction("simhash64w", classOf[SimHash64Weighted], 2)(a =>
+      SimHash64Weighted(a(0), a(1))),
+    // optional second arg: numHashes (default 32)
+    new SqlFunction("minhash_sig", classOf[MinHashSig], 1, 2)(a =>
+      MinHashSig(a(0), if (a.size == 2) a.int(1, "numHashes", lo = 1) else 32)),
+    new SqlFunction("intersect_card", classOf[IntersectCard], 2)(a => IntersectCard(a(0), a(1))),
+    new SqlFunction("union_card", classOf[UnionCard], 2)(a => UnionCard(a(0), a(1))),
+    new SqlFunction("hash60", classOf[Hash60], 1)(a => Hash60(a(0))),
+    // bit p of the bucket is 1L << p: 64 bits is the whole long
+    new SqlFunction("lsh_bucket", classOf[LshBucket], 3)(a =>
+      LshBucket(a(0), a.int(1, "table"), a.int(2, "bits", 1, 64))),
+    // the sign matrix holds k × 64 entries
+    new SqlFunction("rp_project", classOf[RpProject], 2)(a =>
+      RpProject(a(0), a.int(1, "k", 1, Int.MaxValue / 64))),
+    new SqlFunction("robust_prune", classOf[RobustPruneExpr], 4)(a =>
+      RobustPruneExpr(
+        a(0),
+        a.int(1, "r", lo = 1),
+        a.long(2, "alphaNum", lo = 1),
+        a.long(3, "alphaDen", lo = 1))),
+    new SqlFunction("robust_prune_idx", classOf[RobustPruneIdxExpr], 6)(a =>
+      RobustPruneIdxExpr(
+        a(0),
+        a(1),
+        a(2),
+        a.int(3, "r", lo = 1),
+        a.long(4, "alphaNum", lo = 1),
+        a.long(5, "alphaDen", lo = 1))))
 
   def register(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(RewriteSetCardinality)) {
@@ -32,106 +104,6 @@ object GraftFunctions {
         spark.experimental.extraOptimizations :+ RewriteSetCardinality
     }
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim",
-      args => { checkArity("cosine_sim", args, 2); CosineSim(args.head, args(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64",
-      args => { checkArity("simhash64", args, 1); SimHash64(args.head) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig",
-      // optional second arg: a literal numHashes (default 32)
-      args => {
-        checkArity("minhash_sig", args, 1, 2)
-        val numHashes = args.lift(1) match {
-          case None => 32
-          case Some(org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)) => v
-          case Some(other) =>
-            throw new IllegalArgumentException(
-              s"minhash_sig: numHashes must be an integer literal, got $other")
-        }
-        MinHashSig(args.head, numHashes)
-      },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64w",
-      args => { checkArity("simhash64w", args, 2); SimHash64Weighted(args.head, args(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "intersect_card",
-      args => { checkArity("intersect_card", args, 2); IntersectCard(args.head, args(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "union_card",
-      args => { checkArity("union_card", args, 2); UnionCard(args.head, args(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "hash60",
-      args => { checkArity("hash60", args, 1); Hash60(args.head) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "lsh_bucket",
-      args => {
-        checkArity("lsh_bucket", args, 3)
-        val lits = args.drop(1).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"lsh_bucket: table and bits must be integer literals, got $other")
-        }
-        LshBucket(args.head, lits(0), lits(1))
-      },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "robust_prune",
-      args => {
-        checkArity("robust_prune", args, 4)
-        val lits = args.drop(1).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"robust_prune: r, alphaNum, alphaDen must be integer literals, got $other")
-        }
-        // r14 (ADVICE): reject an out-of-Int-range r instead of
-        // silently truncating it
-        if (lits(0) < 1 || lits(0) > Int.MaxValue)
-          throw new IllegalArgumentException(
-            s"robust_prune: r must be a positive Int, got ${lits(0)}")
-        RobustPruneExpr(args.head, lits(0).toInt, lits(1), lits(2))
-      },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "robust_prune_idx",
-      args => {
-        checkArity("robust_prune_idx", args, 6)
-        val lits = args.drop(3).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"robust_prune_idx: r, alphaNum, alphaDen must be integer literals, got $other")
-        }
-        if (lits(0) < 1 || lits(0) > Int.MaxValue)
-          throw new IllegalArgumentException(
-            s"robust_prune_idx: r must be a positive Int, got ${lits(0)}")
-        RobustPruneIdxExpr(args(0), args(1), args(2), lits(0).toInt, lits(1), lits(2))
-      },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "rp_project",
-      args => {
-        checkArity("rp_project", args, 2)
-        val k = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"rp_project: k must be an integer literal, got $other")
-        }
-        RpProject(args.head, k)
-      },
-      "built-in")
+    functions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "built-in"))
   }
 }

@@ -283,12 +283,9 @@ private[graft] trait AnalyticsExtGraph { this: AnalyticsExt.type =>
     */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 3, topK: Int = 50): DataFrame =
     Lineage.checkpointReleasing(spark) { implicit scope =>
-    // r14: the r13 fanOutBy(l_orderkey) pin is gone — the explicit-N
-    // exchange defeated AQE coalescing and pinned every downstream
-    // round of this iterative operator at 32-way on tiny data
-    // (driver-measured regressions across the propagate family);
-    // AQE sizes the explosion stage from data, which is also the
-    // correct behavior at 100 TB.
+    // no explicit-N repartition: AQE coalescing sizes the explosion
+    // stage from data, so every downstream round of this iterative
+    // operator runs at a data-sized width, on tiny data and at scale.
     val pairs = Tables
       .lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -386,7 +383,6 @@ private[graft] trait AnalyticsExtGraph { this: AnalyticsExt.type =>
       dir: String,
       iters: Int = 3,
       topK: Int = 50): DataFrame = Lineage.checkpointReleasing(spark) { implicit scope =>
-    // r14: fanOutBy pin removed — see pageRank
     val pairs = Tables
       .lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -1033,9 +1029,8 @@ private[graft] trait AnalyticsExtGraph { this: AnalyticsExt.type =>
       maxRounds: Int = 12,
       minSupport: Int = 2,
       shortcut: Boolean = true): DataFrame = Lineage.checkpointReleasing(spark) { implicit scope =>
-    // r14: fanOutBy pin removed — it pinned the 12-round propagate
-    // loop's every cached frame, hop join and eager checkpoint at
-    // 32-way on tiny data (driver: 4.9 s → 16.8 s); see pageRank
+    // no explicit-N repartition: AQE sizes the 12-round loop's cached
+    // frames, hop joins and checkpoints from data (see pageRank)
     val po =
       Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")).distinct()
     // r14: pairs is an EAGER cut (was a lazy cache) — sym's two union

@@ -388,15 +388,10 @@ private[graft] trait AnalyticsExtOps { this: AnalyticsExt.type =>
         expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").as("q"))
       .groupBy("l_partkey", "day")
       .agg(sum("q").as("y"))
-    // r14 opt round: ONE linear aggregate pass accumulating the
-    // trajectory array — the r13 form re-ran the recurrence from
-    // scratch per prefix (`transform` × `aggregate(slice(...))`),
-    // O(days²) fold steps for an O(days) recurrence, and was the
-    // suite's slowest non-ANN query by construction. The r13
-    // `fanOutBy(l_partkey)` pin is gone with it: it defeated AQE
-    // coalescing and made the tiny fold pay 32-way scheduling/GC
-    // (driver-measured 3.6 s → 13.4 s); with a linear fold the
-    // default data-sized partitioning is right at every scale.
+    // ONE linear aggregate pass accumulating the trajectory array:
+    // O(days) fold steps for an O(days) recurrence, never a re-run
+    // from scratch per prefix. No explicit-N repartition: AQE
+    // coalescing sizes this stage from data, right at every scale.
     daily
       .groupBy("l_partkey")
       .agg(expr("sort_array(collect_list(named_struct('day', day, 'y', y)))").as("steps"))
